@@ -44,7 +44,7 @@ for it in range(n_iters):
     d1 = time.time() - t0
 
     t0 = time.time()
-    long_df = e2.extract_ficha(pages, adjust_vacation=True)
+    long_df = e2.extract_ficha(pages)
     adj = e2.values_table(long_df)
     n2 = adj.count()
     d2 = time.time() - t0

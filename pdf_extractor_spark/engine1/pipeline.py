@@ -321,8 +321,8 @@ def extract_folha(pages_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     # — see ops.layout): the heavy explode+classify+join stage must run
     # at full parallelism even off a narrow scan. At production split
     # sizing the gate never fires and payloads never shuffle before the
-    # line-level exchange below. (The previous guard compared
-    # `.rdd.getNumPartitions()` to the core count, which costs ~1 s of
+    # line-level exchange below. (The previous guard compared the RDD
+    # partition count to the core count, which costs ~1 s of
     # driver-side plan→RDD compilation per fresh call and is blind to
     # single-row-group files that plan many empty splits.)
     from ..ops.layout import rebalance_narrow

@@ -14,11 +14,12 @@ kernel runs under ``mapInPandas`` — embarrassingly parallel, zero
 shuffle. Cross-page state (G2/G5) never crosses documents, so it lives
 entirely inside the per-document call. At 100 TB the only skew risk is
 a single giant document serializing one task; the scan partitioning
-(`maxPartitionBytes`) bounds rows per task and `salt_hint` documents
-above a page threshold can be split into page-range sub-rows with a
-carry-state handoff pass (see ``pipeline.repartition_by_url``).
+(`maxPartitionBytes`) bounds rows per task, and oversized documents can
+be split into page-range chunk rows with an exact carry-state handoff
+(``engine2/salted.py``).
 
-Output is a long table ``(url, code, year, month, value, ...)`` plus one
+Output is a long table ``(url, code, year, month, value, ...)`` — A1
+folded and A6 vacation-adjusted per document — plus one
 ``__metrics__`` row per document carrying lineage counters (pages
 parsed, decode failures, conflict overwrites, expired carries, person
 name) for the audit table.
@@ -35,7 +36,7 @@ import pandas as pd
 import numpy as np
 
 from ..oracle_ref import e2_person_name  # shared scalar; test-parity critical
-from ..payload import MAGIC, decode_layout, decode_layout_columnar
+from ..payload import decode_layout_columnar
 
 # storage-code config (reference TARGET_CODES, ficha_financeira_processor.py:53-71)
 TARGET_CODES = [
@@ -424,42 +425,39 @@ def fold_events(events: list) -> tuple[dict, int, int]:
 
 
 def decode_pages_fast(html) -> tuple[float, list]:
-    """Payload → (page_h, pages). v2 payloads decode columnar (block
-    float decode + one text split) straight into `_Page` objects —
-    no per-word tuples; v1 JSON falls back to the tuple view."""
+    """Payload → (page_h, pages): columnar block decode (one float block
+    + one text split) straight into `_Page` objects — no per-word
+    tuples. Raises on non-WBX2 bytes (one decode failure upstream)."""
     if html is None or len(html) == 0:
         return 0.0, []
-    if bytes(html[:4]) == MAGIC:
-        page_h, counts, texts, cols = decode_layout_columnar(html)
-        x0, x1, top, bottom = (cols[i].tolist() for i in range(4))
-        # same arithmetic as the scalar path: round-half-even of
-        # doctop*100 (np.rint == Python round for binary doubles),
-        # (top+bottom)/2 exact in IEEE either way
-        line_key = np.rint(cols[4] * 100.0).astype(np.int64).tolist()
-        cy = ((cols[2] + cols[3]) / 2.0).tolist()
-        cx = ((cols[0] + cols[1]) / 2.0).tolist()
-        pages = []
-        a = 0
-        for n in counts.tolist():
-            b = a + n
-            pages.append(_Page.from_cols(
-                texts[a:b], x0[a:b], x1[a:b], top[a:b], bottom[a:b],
-                line_key[a:b], cy[a:b], cx[a:b]))
-            a = b
-        return page_h, pages
-    return decode_layout(html)
+    page_h, counts, texts, cols = decode_layout_columnar(html)
+    x0, x1, top, bottom = (cols[i].tolist() for i in range(4))
+    # same arithmetic as the scalar path: round-half-even of
+    # doctop*100 (np.rint == Python round for binary doubles),
+    # (top+bottom)/2 exact in IEEE either way
+    line_key = np.rint(cols[4] * 100.0).astype(np.int64).tolist()
+    cy = ((cols[2] + cols[3]) / 2.0).tolist()
+    cx = ((cols[0] + cols[1]) / 2.0).tolist()
+    pages = []
+    a = 0
+    for n in counts.tolist():
+        b = a + n
+        pages.append(_Page.from_cols(
+            texts[a:b], x0[a:b], x1[a:b], top[a:b], bottom[a:b],
+            line_key[a:b], cy[a:b], cx[a:b]))
+        a = b
+    return page_h, pages
 
 
 def apply_vacation_values(values: dict) -> None:
     """A6 vacation adjustment, fused per-document (in place):
     3123-Base[key] += 527-Valor / (527-Comp / 100) wherever both 527
-    series exist and comp != 0. Exactly the arithmetic of the relational
-    path (``pipeline.apply_vacation_adjustments_df`` /
-    ``brnum.decimal_div_pct_udf``): default-context Decimal division,
-    canonical-string roundtrip. Per (url, year, month) the adjustment is
-    document-local, so fusing it into the kernel costs zero shuffles —
-    the relational form pays a pivot + three joins. Byte-identical
-    output is pinned by tests/test_engine2.py."""
+    series exist and comp != 0, with default-context Decimal division
+    and a canonical-string roundtrip (the arithmetic of
+    ``oracle_ref.apply_vacation_adjustments``, pinned by
+    tests/test_engine2.py). The adjustment is document-local, so both
+    the plain kernel and the salted path's per-url pass apply it
+    without a join."""
     comp = values.get("527-INSS-Comp")
     valor = values.get("527-INSS-Valor")
     if not comp or not valor:
@@ -481,8 +479,7 @@ def apply_vacation_values(values: dict) -> None:
             else str(additional)
 
 
-def _extract_doc(url: str, html, text: str,
-                 adjust_vacation: bool = False) -> tuple[list, list]:
+def _extract_doc(url: str, html, text: str) -> tuple[list, list]:
     """One document → (value rows, metrics row-values)."""
     decode_failures = 0
     try:
@@ -493,8 +490,7 @@ def _extract_doc(url: str, html, text: str,
 
     events, _state, _ffh = run_pages(raw_pages, page_h, PageRunState())
     values, conflicts, carry_expired = fold_events(events)
-    if adjust_vacation:
-        apply_vacation_values(values)
+    apply_vacation_values(values)
 
     rows = []
     for code in sorted(values):
@@ -555,25 +551,17 @@ def _row_values(pg: _Page, anchor: int, block: dict, column: int,
     return out
 
 
-def make_extract_kernel(adjust_vacation: bool = False):
-    """mapInPandas kernel factory: pages-table batches → long rows.
-    `adjust_vacation=True` fuses the A6 adjustment into the per-document
-    pass (shuffle-free; see apply_vacation_values)."""
-    cols = ["url", "code", "year", "month", "value",
-            "pages", "decode_failures", "conflicts", "carry_expired",
-            "person"]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows: list = []
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                rows, metrics = _extract_doc(url, html, text, adjust_vacation)
-                out_rows.extend(rows)
-                out_rows.append(metrics)
-            yield pd.DataFrame(out_rows, columns=cols)
-
-    return kernel
+_COLS = ["url", "code", "year", "month", "value",
+         "pages", "decode_failures", "conflicts", "carry_expired",
+         "person"]
 
 
-# default (unadjusted) kernel — public mapInPandas entry
-extract_ficha_long = make_extract_kernel(False)
+def extract_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: pages-table batches → E2_LONG_SCHEMA rows."""
+    for pdf in batches:
+        out_rows: list = []
+        for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
+            rows, metrics = _extract_doc(url, html, text)
+            out_rows.extend(rows)
+            out_rows.append(metrics)
+        yield pd.DataFrame(out_rows, columns=_COLS)

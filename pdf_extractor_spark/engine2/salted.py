@@ -25,17 +25,18 @@ At the head boundary the pass-1 and pass-2 states provably coincide
 (prefix blocks are dead by then in both runs), so pass-1 tails are kept
 as-is. The final A1 fold (last-write-wins + conflict transitions +
 expiry counts) runs relationally over the merged, totally-ordered
-event stream.
+event stream; the A6 vacation adjustment then runs per url over the
+folded values with the plain kernel's own `apply_vacation_values`.
 
 Cost shape at scale: pass 1 = embarrassingly parallel mapInPandas over
 chunk rows (the skew fix); pass 2 = one applyInPandas over only the
 oversized urls, each touching only head pages; the merge = one shuffle
-keyed by (url, code, year, month).
+keyed by (url, code, year, month); A6 = one shuffle of the folded
+value rows keyed by url.
 """
 
 from __future__ import annotations
 
-import json
 from typing import Iterator
 
 import pandas as pd
@@ -45,8 +46,10 @@ from pyspark.sql import functions as F
 import numpy as np
 
 from ..oracle_ref import e2_person_name
-from ..payload import _HDR, MAGIC, decode_layout, encode_layout
-from .kernel import MAX_BLOCK_CARRY, METRICS_CODE, PageRunState, run_pages
+from ..payload import (decode_layout, encode_layout, layout_blocks,
+                       pack_layout)
+from .kernel import (MAX_BLOCK_CARRY, METRICS_CODE, PageRunState,
+                     apply_vacation_values, decode_pages_fast, run_pages)
 
 CHUNK_SCHEMA = ("url string, salt int, n_chunks int, page_offset int, "
                 "n_pages int, page_h double, chunk_html binary, "
@@ -59,25 +62,18 @@ EVENT_SCHEMA = ("url string, salt int, kind string, code string, "
 REPLACE_SCHEMA = ("url string, salt int, reproc_end int")
 
 
-def _chunk_blobs_v2(html: bytes, max_pages: int):
-    """Chunk a v2 WBX2 blob by pure buffer slicing — no Word-tuple
-    round trip. Output bytes are IDENTICAL to
+def _chunk_blobs(html: bytes, max_pages: int):
+    """Chunk a WBX2 blob by pure buffer slicing — no Word-tuple round
+    trip. Output bytes are IDENTICAL to
     `encode_layout(page_h, pages[k*mp:(k+1)*mp])` (pinned by
-    tests/test_salted.py::test_split_chunks_blob_bit_identical):
-    the chunk head is re-packed, and counts / cols / text-blob are
-    contiguous ranges of the source buffer. ~10x less per-page
-    split cost than decode+re-encode — the split is the serial leg
-    of the salted path, so its cost bounds how much skew salting
-    can recover (measured in BENCH/BASELINE.md)."""
-    buf = bytes(html)
-    page_h, n_pages, total = _HDR.unpack_from(buf, 4)
-    off = 4 + _HDR.size + 4
-    counts = np.frombuffer(buf, np.int32, n_pages, off)
-    off += 4 * n_pages
-    off += (-off) % 8
-    cols = np.frombuffer(buf, np.float64, 5 * total,
-                         off).reshape(5, total)
-    tblob = buf[off + 40 * total:]
+    tests/test_salted.py::test_split_chunks_blob_bit_identical): each
+    chunk re-frames contiguous ranges of the source counts / cols /
+    text blocks. ~10x less per-page split cost than decode+re-encode —
+    the split is the serial leg of the salted path, so its cost bounds
+    how much skew salting can recover (measured in BENCH/BASELINE.md).
+    Raises on non-WBX2 bytes."""
+    page_h, counts, cols, tblob = layout_blocks(html)
+    n_pages, total = len(counts), cols.shape[1]
     # word-text boundaries inside the NUL-joined text blob
     if total > 1:
         nul = np.flatnonzero(
@@ -91,15 +87,11 @@ def _chunk_blobs_v2(html: bytes, max_pages: int):
     for p0 in range(0, n_pages, max_pages):
         p1 = min(p0 + max_pages, n_pages)
         w0, w1 = int(cum[p0]), int(cum[p1])
-        head = (MAGIC + _HDR.pack(float(page_h), p1 - p0, w1 - w0)
-                + b"\x00" * 4)
-        body = counts[p0:p1].tobytes()
-        pad = (-(len(head) + len(body))) % 8
-        colb = np.ascontiguousarray(cols[:, w0:w1]).tobytes()
         tb = (tblob[int(starts[w0]):int(ends[w1 - 1])]
               if w1 > w0 else b"")
-        out.append((p1 - p0, head + body + b"\x00" * pad + colb + tb))
-    return float(page_h), n_pages, out
+        out.append((p1 - p0, pack_layout(page_h, counts[p0:p1],
+                                         cols[:, w0:w1], tb)))
+    return page_h, n_pages, out
 
 
 def split_chunks(pages_df: DataFrame, max_pages: int = 16) -> DataFrame:
@@ -107,7 +99,8 @@ def split_chunks(pages_df: DataFrame, max_pages: int = 16) -> DataFrame:
 
     max_pages must exceed MAX_BLOCK_CARRY so a carried-in block can
     never survive a whole chunk (the stitch-horizon containment the
-    pass-2 proof needs).
+    pass-2 proof needs). A payload that is not WBX2 becomes one empty
+    chunk with decode_failed = 1.
     """
     assert max_pages > MAX_BLOCK_CARRY
 
@@ -117,33 +110,18 @@ def split_chunks(pages_df: DataFrame, max_pages: int = 16) -> DataFrame:
             for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
                 failed = 0
                 person = e2_person_name(text or "")
-                if html and bytes(html[:4]) == MAGIC:
-                    try:
-                        page_h, n, blobs = _chunk_blobs_v2(html, max_pages)
-                    except Exception:
-                        page_h, n, blobs = 0.0, 0, []
-                        failed = 1
-                    if not blobs:
-                        blobs = [(0, encode_layout(page_h, []))]
-                    n_chunks = len(blobs)
-                    for k, (c_pages, blob) in enumerate(blobs):
-                        rows.append((url, k, n_chunks, k * max_pages,
-                                     c_pages, page_h, blob,
-                                     person if k == 0 else None,
-                                     failed if k == 0 else 0, n))
-                    continue
-                # v1 JSON / empty blobs: the historical tuple path
                 try:
-                    page_h, pages = decode_layout(html)
+                    page_h, n, blobs = (_chunk_blobs(html, max_pages)
+                                        if html else (0.0, 0, []))
                 except Exception:
-                    page_h, pages = 0.0, []
+                    page_h, n, blobs = 0.0, 0, []
                     failed = 1
-                n = len(pages)
-                n_chunks = max(1, -(-n // max_pages))
-                for k in range(n_chunks):
-                    chunk = pages[k * max_pages:(k + 1) * max_pages]
-                    rows.append((url, k, n_chunks, k * max_pages, len(chunk),
-                                 page_h, encode_layout(page_h, chunk),
+                if not blobs:
+                    blobs = [(0, encode_layout(page_h, []))]
+                n_chunks = len(blobs)
+                for k, (c_pages, blob) in enumerate(blobs):
+                    rows.append((url, k, n_chunks, k * max_pages,
+                                 c_pages, page_h, blob,
                                  person if k == 0 else None,
                                  failed if k == 0 else 0, n))
             yield pd.DataFrame(rows, columns=[
@@ -173,7 +151,7 @@ def pass1_events(chunks: DataFrame) -> DataFrame:
             for url, salt, off, blob, page_h in zip(
                     pdf["url"], pdf["salt"], pdf["page_offset"],
                     pdf["chunk_html"], pdf["page_h"]):
-                _h, pages = decode_layout(blob)
+                _h, pages = decode_pages_fast(blob)
                 events, end_state, ffh = run_pages(
                     pages, float(page_h), PageRunState(), page_offset=int(off))
                 rows.extend(_events_df_rows(url, int(salt), events, int(off)))
@@ -215,6 +193,8 @@ def pass2_stitch(chunks: DataFrame, states: DataFrame) -> tuple[DataFrame, DataF
                 continue
             full_replay = ffh < 0 or (ffh + MAX_BLOCK_CARRY) >= n_pages
             reproc_end = n_pages if full_replay else ffh + MAX_BLOCK_CARRY
+            # word tuples, not `_Page`s: only the head pages are re-run,
+            # so building every page's line index up front is waste
             _h, pages = decode_layout(r.chunk_html)
             events, end_state, _ = run_pages(
                 pages[:reproc_end], page_h, state, page_offset=off)
@@ -234,6 +214,29 @@ def pass2_stitch(chunks: DataFrame, states: DataFrame) -> tuple[DataFrame, DataF
     ranges = stitched.filter(F.col("kind") == "r").select(
         "url", "salt", "reproc_end")
     return repl_events, ranges
+
+
+VALUE_SCHEMA = "url string, code string, year int, month int, value string"
+
+
+def adjust_vacation_by_url(values: DataFrame) -> DataFrame:
+    """A6 over folded (url, code, year, month, value) rows: one per-url
+    pass running the plain kernel's `apply_vacation_values`. No join —
+    the adjustment is document-local."""
+
+    def adjust(pdf: pd.DataFrame) -> pd.DataFrame:
+        doc: dict[str, dict] = {}
+        for code, y, m, v in zip(pdf["code"], pdf["year"], pdf["month"],
+                                 pdf["value"]):
+            doc.setdefault(code, {})[(int(y), int(m))] = v
+        apply_vacation_values(doc)
+        url = pdf["url"].iloc[0]
+        return pd.DataFrame(
+            [(url, code, y, m, v) for code, series in doc.items()
+             for (y, m), v in series.items()],
+            columns=["url", "code", "year", "month", "value"])
+
+    return values.groupBy("url").applyInPandas(adjust, schema=VALUE_SCHEMA)
 
 
 def assemble(chunks: DataFrame, p1: DataFrame, p2_events: DataFrame,
@@ -291,7 +294,7 @@ def assemble(chunks: DataFrame, p1: DataFrame, p2_events: DataFrame,
             "person",
         )
     )
-    value_rows = values.select(
+    value_rows = adjust_vacation_by_url(values).select(
         "url", "code", "year", "month", "value",
         F.lit(None).cast("int").alias("pages"),
         F.lit(None).cast("int").alias("decode_failures"),
@@ -302,18 +305,18 @@ def assemble(chunks: DataFrame, p1: DataFrame, p2_events: DataFrame,
     return value_rows.unionByName(metrics)
 
 
-def extract_ficha_salted(pages_df: DataFrame, max_pages: int = 16,
-                         with_layout_only: bool = True) -> DataFrame:
+def extract_ficha_salted(pages_df: DataFrame, max_pages: int = 16
+                         ) -> DataFrame:
     """Drop-in replacement for `pipeline.extract_ficha` that splits
     oversized documents into parallel page-range chunks with an exact
-    carry-state handoff. Output is identical (tests pin it)."""
+    carry-state handoff. Output, A6 included, is identical (tests pin
+    it)."""
     # person-name scan reads the first text page only (see
     # pipeline.extract_ficha) — ship one page of text per document
     df = pages_df.select(
         "url", "html",
-        F.substring_index(F.col("text"), "\f", 1).alias("text"))
-    if with_layout_only:
-        df = df.filter(F.length("html") > 0)
+        F.substring_index(F.col("text"), "\f", 1).alias("text")
+    ).filter(F.length("html") > 0)
     # chunk rows inherit the INPUT row's partition: a single oversized
     # document's chunks all land in one task and pass 1 runs them
     # serially — the straggler salting exists to kill (measured: one

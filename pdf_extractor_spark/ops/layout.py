@@ -72,15 +72,19 @@ def dim_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
 
     Building the same rows as a projection over `spark.range(n)` keeps
     exact row-count stats, so the estimate stays a few hundred bytes.
-    `schema` is the same DDL string createDataFrame takes; column
-    order must match the tuples."""
-    n = len(rows)
-    names = [c.strip().split()[0] for c in schema.split(",")]
-    types = [c.strip().split(None, 1)[1] for c in schema.split(",")]
+    `schema` is the same DDL string createDataFrame takes (parsed by
+    Spark's own DDL parser); column order must match the tuples, and
+    values must already conform to the declared types — each column is
+    a cast, which yields NULL where createDataFrame would raise."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    fields = _parse_datatype_string(schema).fields
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
     idx = (F.col("id") + 1).cast("int")
-    cols = [
+    return spark.range(len(rows)).select(*[
         F.element_at(F.array(*[F.lit(r[i]) for r in rows]), idx)
-        .cast(types[i]).alias(names[i])
-        for i in range(len(names))
-    ]
-    return spark.range(n).select(*cols)
+        .cast(f.dataType).alias(f.name)
+        for i, f in enumerate(fields)
+    ])

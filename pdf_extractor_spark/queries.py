@@ -918,7 +918,7 @@ def extract_e2_proventos(spark, sf_dir):
     from .engine2 import pipeline as e2
 
     pages = corpus_df(spark, _corpus_docs_for(sf_dir))
-    adj = e2.values_table(e2.extract_ficha(pages, adjust_vacation=True))
+    adj = e2.values_table(e2.extract_ficha(pages))
     return e2.default_series_table(adj, "3123-Base", (2019, 1), (2021, 12))
 
 
@@ -1576,5 +1576,5 @@ def pdf_extract_e2(spark, sf_dir):
 
     pdfs = e2_pdf_corpus_df(spark, _corpus_docs_for(sf_dir))
     adj = e2.values_table(
-        e2.extract_ficha(parse_pdf_layout(pdfs), adjust_vacation=True))
+        e2.extract_ficha(parse_pdf_layout(pdfs)))
     return e2.default_series_table(adj, "3123-Base", (2019, 1), (2021, 12))

@@ -19,14 +19,14 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    host_cpus = str(os.cpu_count() or 1)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', host_cpus)}]"
     if shuffle_partitions is None:
         # match parallelism; on a real cluster this would be
         # 2-3x total executor cores and AQE coalesces down.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else host_cpus
+        shuffle_partitions = max(8, int(host_cpus if n == "*" else n))
 
     builder = (
         SparkSession.builder.master(master)

@@ -137,9 +137,7 @@ def stream_extract_pdf_e2(
     stream = (spark.readStream
               .schema(f"url string, {pdf_col} binary")
               .parquet(pages_path))
-    long_df = e2.extract_ficha(
-        parse_pdf_layout(stream, pdf_col=pdf_col),
-        repartition=False, adjust_vacation=True)
+    long_df = e2.extract_ficha(parse_pdf_layout(stream, pdf_col=pdf_col))
     writer = (long_df.writeStream.format("parquet")
               .outputMode("append")
               .option("path", out_path)

@@ -111,8 +111,8 @@ def test_e2_from_pdf_proventos_byte_identical(wbx_long, pdf_long):
     start, end = (2019, 1), (2022, 12)
 
     def render(df):
-        adj = e2.apply_vacation_adjustments_df(e2.values_table(df))
-        tbl = e2.default_series_table(adj, "3123-Base", start, end)
+        tbl = e2.default_series_table(e2.values_table(df), "3123-Base",
+                                      start, end)
         out: dict[str, list] = {}
         for r in tbl.orderBy("url", "year", "month").collect():
             out.setdefault(r.url, []).append((r.mes_ano, r.valor))
@@ -126,13 +126,24 @@ def test_e2_from_pdf_proventos_byte_identical(wbx_long, pdf_long):
 
 def test_e2_from_pdf_shuffle_free_plan(spark, pdf_corpus):
     """bytes → word boxes → layout kernel stays scan → mapInPandas →
-    mapInPandas with zero exchanges (same 100 TB shape as the text
-    front door)."""
-    df = e2.extract_ficha(parse_pdf_layout(pdf_corpus),
-                          repartition=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    mapInPandas with zero exchanges when the input's size is unknown
+    or large (same 100 TB shape as the text front door); a cached,
+    provably small input gets exactly one round-robin exchange before
+    the kernel (ops.layout.rebalance_narrow)."""
+    def plan_of(pdfs):
+        df = e2.extract_ficha(parse_pdf_layout(pdfs))
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    rows = [(r.url, r.pdf) for r in pdf_corpus.collect()]
+    plan = plan_of(spark.createDataFrame(rows, "url string, pdf binary"))
     assert plan.count("MapInPandas") == 2
     assert "Exchange" not in plan
+
+    pdf_corpus.count()  # materialized cache → honest, small estimate
+    small = plan_of(pdf_corpus)
+    assert small.count("MapInPandas") == 2
+    assert small.count("Exchange") == 1
+    assert "Exchange RoundRobinPartitioning" in small
 
 
 def _one_page_pdf(body: bytes, font_extra: bytes = b"") -> bytes:

@@ -14,6 +14,32 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _subtree(plan: str, marker: str) -> str:
+    """The first plan node line containing `marker` plus its whole child
+    subtree: the following lines indented deeper than it, up to the
+    next line at or above its depth (a sibling or an ancestor's
+    sibling)."""
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if marker in ln)
+    out = [lines[i]]
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
+def _hinted_joins(df) -> list[str]:
+    """Join lines of the optimized logical plan that carry a strategy
+    hint (the optimizer folds ResolvedHint nodes into the joins)."""
+    logical = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in logical.splitlines()
+            if "Join " in ln and "Hint=" in ln]
+
+
 def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
@@ -141,22 +167,34 @@ def test_contamination_no_corpus_exchange_before_join(spark, sf_dir):
 
 
 def test_corpus_proportional_joins_not_hinted(spark):
-    """A6's adjustment table (one row per url/year/month) and A8's
-    include-flag table (one row per url) grow with the corpus — a
-    forced broadcast hint would OOM at 10^9 urls. The strategy must be
-    left to AQE: no ResolvedHint in the optimized logical plan, while
-    at sandbox scale AQE still picks a broadcast join on its own."""
+    """A8's include-flag table (one row per url) grows with the corpus —
+    a forced broadcast hint would OOM at 10^9 urls — so its join
+    strategy is left to AQE; the only hinted join in the K3 writer is
+    the month-dimension cross join. The salted path's per-url A6 pass
+    is likewise join- and hint-free. At sandbox scale AQE still picks a
+    broadcast join on its own."""
     from pdf_extractor_spark import datagen
+    from pdf_extractor_spark.engine2.salted import extract_ficha_salted
 
     pages = spark.createDataFrame(datagen.corpus_pandas(8))
     vals = e2.values_table(e2.extract_ficha(pages))
 
-    adjusted = e2.apply_vacation_adjustments_df(vals)
     cart = e2.cartoes_table(vals, (2019, 1), (2019, 12))
-    for df in (adjusted, cart):
-        logical = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "ResolvedHint" not in logical
-        assert "UnresolvedHint" not in logical
+    logical = cart._jdf.queryExecution().optimizedPlan().toString()
+    url_joins = [ln for ln in logical.splitlines()
+                 if "Join LeftOuter" in ln and "url" in ln
+                 and "year" not in ln]
+    assert url_joins, "the include-flag join must be in the plan"
+    assert all("Hint=" not in ln for ln in url_joins)
+    hinted = _hinted_joins(cart)
+    assert hinted and all("Join Cross" in ln for ln in hinted)
+
+    salted = extract_ficha_salted(pages)
+    salted_logical = salted._jdf.queryExecution().optimizedPlan().toString()
+    assert "FlatMapGroupsInPandas [url" in salted_logical
+    assert "adjust(" in salted_logical
+    assert not _hinted_joins(salted)
+
     # AQE still broadcasts the small side at this scale
     cart.collect()
     plan = _plan(cart)
@@ -214,6 +252,27 @@ def test_dim_df_keeps_union_estimate_honest(spark, sf_dir):
     assert "RoundRobinPartitioning" in _plan(planted)
 
 
+def test_dim_df_parses_ddl_types_and_empty_rows(spark):
+    """dim_df reads the DDL with Spark's own parser (a comma inside
+    `decimal(10,2)` is part of the type, not a column separator) and
+    builds an empty dim with the declared schema and honest stats."""
+    from decimal import Decimal
+
+    from pdf_extractor_spark.ops.layout import dim_df
+
+    rows = [(1, Decimal("12.34")), (2, Decimal("5.50"))]
+    d = dim_df(spark, rows, "k int, amt decimal(10,2)")
+    assert d.schema.simpleString() == "struct<k:int,amt:decimal(10,2)>"
+    assert [tuple(r) for r in d.orderBy("k").collect()] == rows
+
+    empty = dim_df(spark, [], "k int, amt decimal(10,2)")
+    assert empty.schema.simpleString() == "struct<k:int,amt:decimal(10,2)>"
+    assert empty.collect() == []
+    est = int(str(empty._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes()))
+    assert est < 10_000
+
+
 def test_curate_gate_filter_not_pushed_below_rebalance(spark, sf_dir):
     """The quality/lang gate predicate re-evaluates every regex
     feature; pushed below the round-robin exchange it runs on the
@@ -227,8 +286,8 @@ def test_curate_gate_filter_not_pushed_below_rebalance(spark, sf_dir):
     df = curate_corpus(_planted_curation_corpus(spark, sf_dir))
     plan = _plan(df)
     assert "SPARK_PARTITION_ID" in plan  # the non-deterministic guard
-    rr = plan.find("Exchange RoundRobinPartitioning")
-    assert rr != -1
-    below = plan[rr:]  # tree printed top-down: below-exchange = after
+    assert "Exchange RoundRobinPartitioning" in plan
+    below = _subtree(plan, "Exchange RoundRobinPartitioning")
+    assert "Scan" in below  # the exchange's child subtree reaches the scan
     assert "regexp_extract_all" not in below
     assert "regexp_replace" not in below

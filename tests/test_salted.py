@@ -83,3 +83,40 @@ def test_split_chunks_blob_bit_identical(spark, corpus):
             assert got.n_chunks == n_chunks and got.total_pages == len(pages)
             n_checked += 1
     assert n_checked > len(rows)  # multi-chunk docs exist in the corpus
+
+
+def _malformed_payloads() -> dict[str, bytes]:
+    import json
+
+    import numpy as np
+
+    from pdf_extractor_spark.payload import _HDR, MAGIC
+
+    legacy_json = json.dumps(
+        {"height": 842.0,
+         "pages": [[["Comp.", 100.0, 130.0, 50.0, 60.0, 50.0]]]}).encode()
+    random_bytes = np.random.default_rng(7).bytes(512)
+    assert random_bytes[:4] != MAGIC
+    # valid magic, but `total` claims far more words than the buffer holds
+    truncated = (MAGIC + _HDR.pack(842.0, 1, 1_000_000) + b"\x00" * 4
+                 + np.array([1_000_000], np.int32).tobytes()
+                 + b"\x00" * 4 + b"\x00" * 80)
+    return {"legacy_json": legacy_json, "random": random_bytes,
+            "truncated_wbx2": truncated}
+
+
+@pytest.mark.parametrize("extract", ["plain", "salted"])
+@pytest.mark.parametrize("kind", ["legacy_json", "random", "truncated_wbx2"])
+def test_malformed_payload_counts_one_decode_failure(spark, extract, kind):
+    """WBX2 is the only payload format: any other bytes become one
+    counted decode failure with no pages and no value rows, on both
+    the plain and the salted extractor."""
+    html = _malformed_payloads()[kind]
+    pages = spark.createDataFrame(
+        [("synth://ficha/bad", html, "FICHA FINANCEIRA")],
+        "url string, html binary, text string")
+    fn = e2.extract_ficha if extract == "plain" else extract_ficha_salted
+    long_df = fn(pages)
+    assert e2.values_table(long_df).count() == 0
+    [m] = e2.metrics_table(long_df).collect()
+    assert (m.decode_failures, m.pages) == (1, 0)

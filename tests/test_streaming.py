@@ -99,6 +99,41 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     assert dups == 0
 
 
+def test_stream_extract_ficha_applies_vacation_adjustment(spark, tmp_path):
+    """The streamed Engine-2 rows carry the A6 adjustment, like the
+    batch job: for docs with both 527 series, the streamed 3123-Base
+    equals oracle_ref's adjusted value."""
+    from decimal import Decimal
+
+    from pdf_extractor_spark import oracle_ref as orc
+
+    pages_dir = str(tmp_path / "a6pages")
+    out = str(tmp_path / "a6out")
+    spark.createDataFrame(datagen.corpus_pandas(20)).write.parquet(pages_dir)
+    _await(stream_extract_ficha(spark, pages_dir, out,
+                                str(tmp_path / "a6ckpt")))
+
+    got = {}
+    for r in (spark.read.parquet(out)
+              .filter(F.col("code") == "3123-Base").collect()):
+        got.setdefault(r.url, {})[(r.year, r.month)] = Decimal(r.value)
+    n_adjusted = 0
+    for i in range(20):
+        r = datagen.gen_row(42, i)
+        if "ficha" not in r["url"]:
+            continue
+        values = orc.e2_extract_doc(r["html"], r["text"])["values"]
+        both = (set(values.get("527-INSS-Comp", {}))
+                & set(values.get("527-INSS-Valor", {})))
+        if not both:
+            continue
+        orc.apply_vacation_adjustments(values)
+        want = values["3123-Base"]
+        assert got[r["url"]] == want, r["url"]
+        n_adjusted += len(both)
+    assert n_adjusted > 0, "corpus must hold docs with both 527 series"
+
+
 def test_stream_dedup_exact_suppresses_cross_batch_dups(spark, tmp_path):
     """applyInPandasWithState: first occurrence of each content emitted
     exactly once; duplicates in later micro-batches (and later query
@@ -252,8 +287,7 @@ def test_stream_extract_pdf_e2_incremental(spark, tmp_path):
         .awaitTermination(180)
     got1 = spark.read.parquet(out_dir)
     batch = e2.extract_ficha(
-        parse_pdf_layout(spark.read.parquet(pages_dir)),
-        adjust_vacation=True)
+        parse_pdf_layout(spark.read.parquet(pages_dir)))
     assert key_set(got1) == key_set(batch)
 
     mkfile(fichas[20:])     # a new crawl segment arrives
@@ -261,7 +295,6 @@ def test_stream_extract_pdf_e2_incremental(spark, tmp_path):
         .awaitTermination(180)
     got2 = spark.read.parquet(out_dir)
     batch2 = e2.extract_ficha(
-        parse_pdf_layout(spark.read.parquet(pages_dir)),
-        adjust_vacation=True)
+        parse_pdf_layout(spark.read.parquet(pages_dir)))
     assert key_set(got2) == key_set(batch2)
     assert len(key_set(got2)) > len(key_set(got1))

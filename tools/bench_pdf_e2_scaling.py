@@ -40,7 +40,7 @@ best = float("inf")
 for it in range(n_iters):
     t0 = time.time()
     adj = e2.values_table(
-        e2.extract_ficha(parse_pdf_layout(pdfs), adjust_vacation=True))
+        e2.extract_ficha(parse_pdf_layout(pdfs)))
     n = e2.default_series_table(
         adj, "3123-Base", (2019, 1), (2021, 12)).count()
     d = time.time() - t0

@@ -54,7 +54,7 @@ def run(engine: str, cpus: int, docs: int, evdir: str) -> None:
              .agg(F.sum("n")).first())
         else:
             from pdf_extractor_spark.engine2 import pipeline as e2
-            e2.values_table(e2.extract_ficha(pages, adjust_vacation=True)).count()
+            e2.values_table(e2.extract_ficha(pages)).count()
         print(f"iter {it}: {time.time() - t0:.2f}s"
               + ("  (warm-up)" if it == 0 else ""))
         spark.catalog.clearCache()
