@@ -19,6 +19,7 @@ urls; the keyed sink never overwrites non-empty cells.
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 from pathlib import Path
 
@@ -34,8 +35,11 @@ from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
 
 
 def parse_period(s: str) -> tuple[int, int]:
-    y, m = s.split("-")
-    return int(y), int(m)
+    """argparse type of --start / --end: a YYYY-MM month as (year, month)."""
+    m = re.fullmatch(r"(\d{4})-(0[1-9]|1[0-2])", s)
+    if m is None:
+        raise argparse.ArgumentTypeError(f"{s!r} is not a YYYY-MM month")
+    return int(m[1]), int(m[2])
 
 
 def main() -> None:
@@ -44,8 +48,8 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--start", default="2019-01")
-    ap.add_argument("--end", default="2021-12")
+    ap.add_argument("--start", type=parse_period, default="2019-01")
+    ap.add_argument("--end", type=parse_period, default="2021-12")
     ap.add_argument("--minutes-mode", action="store_true")
     ap.add_argument("--salted-max-pages", type=int, default=None,
                     metavar="N",
@@ -68,11 +72,12 @@ def main() -> None:
                          "native MERGE INTO/snapshots (needs runtime jars)")
     args = ap.parse_args()
 
-    start, end = parse_period(args.start), parse_period(args.end)
+    start, end = args.start, args.end
     if start > end:
         # fail fast, before any output is written (reference
         # ficha_financeira_processor.py:187-188)
-        ap.error(f"--start {args.start} must not be after --end {args.end}")
+        ap.error("--start {}-{:02d} must not be after --end {}-{:02d}"
+                 .format(*start, *end))
 
     spark = get_spark(f"extract-{args.run_id}")
     out = args.out.rstrip("/")
